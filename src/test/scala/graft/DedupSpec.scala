@@ -940,7 +940,7 @@ class DedupSpec extends SparkSpec with Matchers {
     graft.util.BlockRelease.release(docs)
   }
 
-  test("metric-windowed repair: pruned output equals unpruned across all five kernels, and the window prunes (r17)") {
+  test("star + repair, mixed hot bucket: all five group forms equal pair-form components") {
     import graft.functions.TextFunctions.md5Embed
     val s2 = spark
     import s2.implicits._
@@ -949,10 +949,8 @@ class DedupSpec extends SparkSpec with Matchers {
     // are private near-pairs of growing size L = 2+j — word-set Jaccard
     // L/(L+2) ≥ 0.5, cross-pairs share only "x" (J ≈ 1/sizes < 0.5).
     // In the hot bucket the center (doc 0, the smallest doc) fails
-    // against almost everyone → verify-MIXED, repair-heavy — exactly
-    // the regime the r17 window targets — and the ln-size positions
-    // span ln 4 .. ln 23 ≫ ln 2, so the window MUST prune (e.g. the
-    // (doc 2, doc 39) repair pair sits 3 size-cells apart).
+    // against almost everyone → verify-MIXED and repair-heavy, so the
+    // repair round carries the private near-pair edges.
     val docs = (0 until 20).flatMap { j =>
       val L = 2 + j
       val a = (1 to L).map(i => s"a${j}_$i")
@@ -965,21 +963,21 @@ class DedupSpec extends SparkSpec with Matchers {
       "star verify tried ([0-9,]+) star \\+ ([0-9,]+) repair".r
         .findFirstMatchIn(err)
         .fold(-1L)(m => m.group(2).replace(",", "").toLong)
-    def withStar[T](windowOn: Boolean)(body: => T): (T, String) = {
+    // gate factor 0 forces the star; both repair bounds high keep the
+    // repair round engaged (no fallback to pair-complete)
+    def withStar[T](body: => T): (T, String) = {
       val buf = new java.io.ByteArrayOutputStream()
       val oldErr = System.err
       sys.props("graft.stardedup.factor") = "0"
       sys.props("graft.stardedup.repair") = "1e9"
       sys.props("graft.stardedup.repair.cheap") = "1e9"
-      sys.props("graft.stardedup.window") = if (windowOn) "1" else "0"
       try {
         System.setErr(new java.io.PrintStream(buf, true))
         (body, buf.toString)
       } finally {
         System.setErr(oldErr)
         Seq("graft.stardedup.factor", "graft.stardedup.repair",
-          "graft.stardedup.repair.cheap", "graft.stardedup.window")
-          .foreach(sys.props.remove)
+          "graft.stardedup.repair.cheap").foreach(sys.props.remove)
       }
     }
     def groupsOf(df: org.apache.spark.sql.DataFrame) =
@@ -987,53 +985,56 @@ class DedupSpec extends SparkSpec with Matchers {
         .toMap
     def pairsOf(df: org.apache.spark.sql.DataFrame, a: String, b: String) =
       df.select(a, b).collect().map(r => (r.getLong(0), r.getLong(1)))
-
-    // scoped Jaccard: window on/off outputs equal, on-path equals the
-    // pair form's components, and the windowed repair tried FEWER
-    // candidates (the pruning is real, not just sound)
-    val truthJac = pairsOf(Dedup.ngramJaccardNearDups(
-      docs, "doc_id", "text", "source", 0.5, 1), "doc_a", "doc_b")
-    val (gJacOn, errJacOn) = withStar(true)(groupsOf(
-      Dedup.jaccardNearDupGroups(docs, "doc_id", "text", "source", 0.5, 1)))
-    val (gJacOff, errJacOff) = withStar(false)(groupsOf(
-      Dedup.jaccardNearDupGroups(docs, "doc_id", "text", "source", 0.5, 1)))
-    expectGroupsEqualPairs(gJacOn, truthJac, ids)
-    gJacOff shouldBe gJacOn
-    val (triedOn, triedOff) = (repairTried(errJacOn), repairTried(errJacOff))
-    withClue(s"windowed repair tried=$triedOn unwindowed=$triedOff: ") {
-      triedOn should be >= 0L
-      triedOff should be > triedOn
+    def starEqualsPairs(group: => org.apache.spark.sql.DataFrame,
+        pairs: => org.apache.spark.sql.DataFrame,
+        a: String, b: String): String = {
+      val truth = pairsOf(pairs, a, b)
+      val (g, err) = withStar(groupsOf(group))
+      withClue(s"stderr: $err\n") {
+        err should include("star verify engaged")
+        (err should not).include("falling back to pair-complete")
+        expectGroupsEqualPairs(g, truth, ids)
+      }
+      err
     }
 
-    // the other four kernels: window on ≡ window off (their on-path
-    // truth vs the pair forms is pinned by the r16 forced-star spec)
-    def invariant(run: => Map[Long, (Long, Long)]): Unit = {
-      val (on, _) = withStar(true)(run)
-      val (off, _) = withStar(false)(run)
-      off shouldBe on
+    // scoped Jaccard: the hot "x" bucket's repair round is load-bearing
+    val errJac = starEqualsPairs(
+      Dedup.jaccardNearDupGroups(docs, "doc_id", "text", "source", 0.5, 1),
+      Dedup.ngramJaccardNearDups(docs, "doc_id", "text", "source", 0.5, 1),
+      "doc_a", "doc_b")
+    withClue(s"jaccard stderr: $errJac\n") {
+      repairTried(errJac) should be > 0L
     }
-    invariant(groupsOf(
-      Dedup.minhashNearDupGroups(docs, "doc_id", "text", 0.5)))
-    invariant(groupsOf(
-      Dedup.simhashNearDupGroupsMd5(docs, "doc_id", "text", 3)))
-    invariant(groupsOf(Dedup.shingleCosineGroups(
-      docs, "doc_id", "text", "source", 0.6, 3)))
+    starEqualsPairs(
+      Dedup.minhashNearDupGroups(docs, "doc_id", "text", 0.5),
+      Dedup.minhashNearDups(docs, "doc_id", "text", 0.5), "doc_a", "doc_b")
+    starEqualsPairs(
+      Dedup.simhashNearDupGroupsMd5(docs, "doc_id", "text", 3),
+      Dedup.simhashNearDupsMd5(docs, "doc_id", "text", 3), "doc_a", "doc_b")
+    starEqualsPairs(
+      Dedup.shingleCosineGroups(docs, "doc_id", "text", "source", 0.6, 3),
+      Dedup.shingleCosineVerify(docs, "doc_id", "text", "source", 0.6, 3),
+      "doc_a", "doc_b")
     val vecs = docs.select(col("doc_id"), md5Embed(col("text")).as("v"))
       .localCheckpoint()
-    invariant(groupsOf(Dedup.cosineNearDupGroups(
-      vecs, "doc_id", "v", 9, 10, tables = 96, dim = 16)))
+    starEqualsPairs(
+      Dedup.cosineNearDupGroups(vecs, "doc_id", "v", 9, 10,
+        tables = 96, dim = 16),
+      Dedup.cosineNearDupsExact(vecs, "doc_id", "v", 9, 10,
+        tables = 96, dim = 16), "id_a", "id_b")
     graft.util.BlockRelease.release(Seq(docs, vecs))
   }
 
-  test("windowed exact-bound REJECT and ACCEPT paths: direct gatedBucketEdges pin (r17 lazy-memPlan cut)") {
+  test("star exact repair bound REJECT and ACCEPT paths: direct gatedBucketEdges pin") {
     val s2 = spark
     import s2.implicits._
     // One bucket, members 1..5 carrying a 1-D position p = id; verify
-    // passes iff |p_a − p_b| <= 1 and emits the distance (DistWindow
-    // metric). Center = 1 ⇒ round 1 is verify-MIXED deterministically:
-    // (1,2) passes, (1,3)/(1,4)/(1,5) FAIL — the pass-heavy
-    // short-circuit cannot fire, so the exact post-round-1 windowed
-    // bound always runs. True pair graph: the chain (1,2)(2,3)(3,4)(4,5).
+    // passes iff |p_a − p_b| <= 1. Center = 1 ⇒ round 1 is verify-MIXED
+    // deterministically: (1,2) passes, (1,3)/(1,4)/(1,5) FAIL — the
+    // pass-heavy short-circuit cannot fire, and the bucket is far below
+    // the probe's sample size, so the exact post-round-1 bound always
+    // decides. True pair graph: the chain (1,2)(2,3)(3,4)(4,5).
     val banded = Seq(1L, 2L, 3L, 4L, 5L)
       .map(i => (i, "b", i.toDouble)).toDF("id", "k", "p")
       .localCheckpoint()
@@ -1044,49 +1045,41 @@ class DedupSpec extends SparkSpec with Matchers {
       sys.props("graft.stardedup.factor") = "0"
       sys.props("graft.stardedup.repair") = repairBound
       sys.props("graft.stardedup.repair.cheap") = repairBound
-      sys.props("graft.stardedup.window") = "1"
       try {
         System.setErr(new java.io.PrintStream(buf, true))
         val out = Dedup.gatedBucketEdges(banded, "id", Seq("k"), "specKernel",
-          pairComplete = () => {
-            val pc = banded.as("a").join(banded.as("b"),
-                col("a.k") === col("b.k") && col("a.id") < col("b.id"))
-              .filter(abs(col("a.p") - col("b.p")) <= 1.0)
-              .select(col("a.id").as("la"), col("b.id").as("lb"))
-              .localCheckpoint()
-            pc
-          },
+          pairComplete = () => banded.as("a").join(banded.as("b"),
+              col("a.k") === col("b.k") && col("a.id") < col("b.id"))
+            .filter(abs(col("a.p") - col("b.p")) <= 1.0)
+            .select(col("a.id").as("la"), col("b.id").as("lb"))
+            .localCheckpoint(),
           verify = c => c
-            .withColumn("_dist", abs(col("p_a") - col("p_b")))
-            .withColumn("_pass", col("_dist") <= 1.0),
+            .withColumn("_pass", abs(col("p_a") - col("p_b")) <= 1.0),
           la = "la", lb = "lb",
-          carryCols = Seq("p"),
-          window0 = Some(Dedup.DistWindow("_dist", 1.0)))
+          carryCols = Seq("p"))
         val pairs = out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         graft.util.BlockRelease.release(out)
         (pairs, buf.toString)
       } finally {
         System.setErr(oldErr)
         Seq("graft.stardedup.factor", "graft.stardedup.repair",
-          "graft.stardedup.repair.cheap", "graft.stardedup.window")
-          .foreach(sys.props.remove)
+          "graft.stardedup.repair.cheap").foreach(sys.props.remove)
       }
     }
-    // REJECT leg (repair bound 0 < windowed projection): the r17 second
-    // cut must reach pairComplete() without ever checkpointing memPlan —
-    // the cc projection reads it column-pruned and failedRows sources
-    // its positions from v1's distCol.
+    // REJECT leg (repair bound 0 < exact projection 3 × 4): falls back
+    // to pair-complete after round 1
     val (rejected, errR) = run("0")
-    withClue(s"expected the exact windowed bound to reject: $errR") {
+    withClue(s"expected the exact repair bound to reject: $errR") {
+      errR should include("star round 1 found a FAIL-heavy regime")
       errR should include("falling back to pair-complete")
     }
     rejected shouldBe truth
-    // ACCEPT leg (repair bound 1e9): star + windowed repair, with memD
-    // materialized only past the gate; the repair round is load-bearing
-    // for every chain edge beyond (1,2).
+    // ACCEPT leg (repair bound 1e9): star + repair; the repair round is
+    // load-bearing for every chain edge beyond (1,2)
     val (accepted, errA) = run("1e9")
     withClue(s"expected the star+repair rounds to run: $errA") {
       errA should include("repair candidates")
+      (errA should not).include("falling back to pair-complete")
     }
     accepted shouldBe truth
     graft.util.BlockRelease.release(banded)
